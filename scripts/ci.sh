@@ -34,6 +34,9 @@ sbt -batch "runMain graft.tools.DictLint"
 echo "== compile + test"
 sbt -batch test
 
+echo "== benchmark harness unit tests"
+python3 -m unittest discover -s perfbench -p 'test_*.py'
+
 echo "== correctness vs DuckDB oracle (sf0.01)"
 rm -rf /tmp/graft_ci_vout
 sbt -batch "runMain graft.Verify /root/testdata/sf0.01 /tmp/graft_ci_vout"

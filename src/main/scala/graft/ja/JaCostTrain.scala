@@ -60,7 +60,7 @@ object JaCostTrain {
     val tok = new JaTokenizer(JaMode.Normal)
     val sentences: Seq[(String, Seq[String])] =
       JaGolden.corpus.map(g => (g.sentence, g.expected)) ++
-        JaGolden.heldoutCorpus.map { case (_, s, e) => (s, e) }
+        JaGolden.heldoutSet(1).rows.map { case (_, s, e) => (s, e) }
     var used = 0
     var skipped = 0
     val mismatches = new ArrayBuffer[String]
@@ -140,7 +140,7 @@ object JaCostTrain {
     val w = new java.io.PrintWriter(out, "UTF-8")
     w.println("# GENERATED by graft.ja.JaCostTrain — do not hand-edit.")
     w.println(s"# Trained on $used full-sequence-verified sentences " +
-      s"(${JaGolden.corpus.size} golden + ${JaGolden.heldoutCorpus.size} held-out); " +
+      s"(${JaGolden.corpus.size} golden + ${JaGolden.heldoutSet(1).rows.size} held-out); " +
       s"$trainedRows/$C rows trained ($trainedCells silent cells moved; hand-set margin cells pinned); " +
       s"S=$Scale α=$Alpha κ=$kappa clamp=±$Clamp; contract cells re-pinned (JaCosts.contractCells).")
     for (l <- 0 until C; r <- 0 until C) w.println(s"conn\t$l\t$r\t${conn(l)(r)}")

@@ -87,409 +87,67 @@ object JaGolden {
     */
   def oracleSql: String = literalTable(corpus.map(g => (g.sid, g.expected)))
 
-  /** Held-out evaluation corpus (VERDICT r6 "Next round" #2): 98 sentences
-    * authored BLIND from topic lists (see the resource header for the
-    * protocol and the post-first-run adjudication record). First-run match
-    * rate was 63/98 (SURVEY.md §7.4); after adjudicating 15 convention
-    * conflicts and fixing the 20 genuine gaps it is pinned at 98/98 and
-    * drives q101 inside the driver gate.
+  /** One evaluated blind held-out set: its number, the oracle-gate query
+    * that pins it, its pinned sentence count, and the sentences it may share
+    * with earlier corpora (documented authoring slips). Each set's protocol,
+    * first-run rate and adjudication are in its resource header.
     */
-  lazy val heldoutCorpus: Seq[(Int, String, Seq[String])] =
-    loadHeldout("/graft/ja/heldout_corpus.tsv")
+  final case class Heldout(set: Int, query: String, size: Int,
+      allowedOverlap: Set[String] = Set.empty) {
+    def resource: String = s"/graft/ja/heldout_corpus${if (set == 1) "" else set}.tsv"
 
-  /** Second blind held-out set (round 7): 60 sentences over fresh registers,
-    * authored after the first set's fixes. First-run rate 38/60 (63.3%) —
-    * statistically the same as the first set's 64.3%, establishing the
-    * ~two-thirds out-of-sample rate as stable. Pinned at 60/60 post-fix;
-    * drives q105.
-    */
-  lazy val heldoutCorpus2: Seq[(Int, String, Seq[String])] =
-    loadHeldout("/graft/ja/heldout_corpus2.tsv")
+    /** (1-based sid, sentence, expected NORMAL tokens), loaded once per JVM. */
+    lazy val rows: Seq[(Int, String, Seq[String])] = {
+      val in = getClass.getResourceAsStream(resource)
+      require(in != null, s"missing resource $resource")
+      scala.io.Source.fromInputStream(in, "UTF-8").getLines()
+        .map(_.trim).filter(l => l.nonEmpty && !l.startsWith("#"))
+        .zipWithIndex.map { case (l, i) =>
+          require(!l.contains("'"), s"$resource line contains a quote")
+          val f = l.split("\t", -1)
+          require(f.length == 2, s"$resource line ${i + 1}: expected 2 fields, got ${f.length}")
+          (i + 1, f(0), f(1).split("\\|").toSeq)
+        }.toSeq
+    }
 
-  /** Third blind held-out set (round 7, post compound-verb derivation):
-    * 30 sentences measuring the derived layer's effect. First-run 15/30 —
-    * the compound layer fired broadly but exposed six missing auxiliaries
-    * and the aux-as-V1 hole (both fixed). Pinned at 30/30; drives q106.
-    */
-  lazy val heldoutCorpus3: Seq[(Int, String, Seq[String])] =
-    loadHeldout("/graft/ja/heldout_corpus3.tsv")
-
-  /** Fourth blind held-out set (round 7, after the auxiliary expansion to
-    * 20 and aux-as-V1 composition): authored as 42 sentences over six fresh
-    * registers; 2 coincided verbatim with golden sentences and were dropped
-    * as not out-of-sample (the disjointness pin below caught them), leaving
-    * 40. First-run 19/40 (47.5%) — 7 author-convention conflicts amended,
-    * 14 genuine gaps fixed (17 lexemes + the missing AdjTerm adnominal
-    * attachment cells that let ×強いる|揺れる tie 強い|揺れる). Pinned at
-    * 40/40; drives q107.
-    */
-  lazy val heldoutCorpus4: Seq[(Int, String, Seq[String])] =
-    loadHeldout("/graft/ja/heldout_corpus4.tsv")
-
-  /** Fifth blind held-out set (round 7): 42 sentences over six fresh
-    * registers (pool, fruit picking, camping, coffee shop, calligraphy,
-    * optician). First-run 28/42 (66.7%) — the best of the five blind sets;
-    * 7 author-convention conflicts amended, 9 genuine gaps fixed
-    * (10 lexemes, 立てる added to the productive-auxiliary list, and the
-    * new AuxTa connection class fencing past-た off bare nouns). Pinned at
-    * 42/42; drives q113.
-    */
-  lazy val heldoutCorpus5: Seq[(Int, String, Seq[String])] =
-    loadHeldout("/graft/ja/heldout_corpus5.tsv")
-
-  /** Sixth blind held-out set (round 7): 40 sentences over six fresh
-    * registers (cinema, bookstore, zoo, aquarium, table tennis, ramen
-    * shop). First-run 31/40 (77.5%) — the best of the six blind sets;
-    * 5 author-convention conflicts amended, 4 genuine gaps fixed (compound
-    * verbs 立ち読む/立ち止まる, adverb よちよち, lexicalized お土産 — all
-    * lexeme additions, no lattice change). Pinned at 40/40; drives q119.
-    */
-  lazy val heldoutCorpus6: Seq[(Int, String, Seq[String])] =
-    loadHeldout("/graft/ja/heldout_corpus6.tsv")
-
-  /** Seventh blind held-out set (pre-registered round 9, commit b97f4e9;
-    * wired round 10): 40 sentences over six fresh registers (coin laundry,
-    * bicycle repair, art museum, moving house, vegetable market, library).
-    * Round 9 applied the adjudication lexemes but never recorded the
-    * first-run rate; round 10 reconstructed it exactly by re-running the
-    * pre-adjudication dictionary (commit e40e288 — the tokenizer is
-    * deterministic, so this reproduces the first run bit-for-bit): see the
-    * resource header and SURVEY.md §7.4 for the measured rate and the
-    * itemized adjudication. Pinned at 40/40 post-fix; drives q122.
-    */
-  lazy val heldoutCorpus7: Seq[(Int, String, Seq[String])] =
-    loadHeldout("/graft/ja/heldout_corpus7.tsv")
-
-  /** Eighth blind held-out set (round 10): 40 sentences over six fresh
-    * registers (bowling, ice skating, game arcade, factory tour,
-    * home-improvement store, knitting). First-run 30/40 (75.0%); 1
-    * author-convention amendment, 7 lexeme-level gaps, and 2 measured
-    * lattice fixes (voiced-音便 VOnbin class; Particle→Particle 700→900)
-    * — itemized in the resource header. Pinned at 40/40; drives q123.
-    */
-  lazy val heldoutCorpus8: Seq[(Int, String, Seq[String])] =
-    loadHeldout("/graft/ja/heldout_corpus8.tsv")
-
-  /** Ninth blind held-out set (round 11): 40 sentences over six fresh
-    * registers (golf range, botanical garden, overnight bus, convenience
-    * store, go lessons, autumn-leaf viewing). First-run 28/40 (70.0%); 10
-    * lexeme-level gaps, 0 lattice bugs, 1 author-convention amendment
-    * (kanji 来たい lemmatizes to 来る, not くる), 5 stale golden pins
-    * updated to the atomic-compound convention, and one documented
-    * authoring slip (sid 38 duplicates golden sid 1236) — itemized in the
-    * resource header. Pinned at 40/40; drives q124.
-    */
-  lazy val heldoutCorpus9: Seq[(Int, String, Seq[String])] =
-    loadHeldout("/graft/ja/heldout_corpus9.tsv")
-
-  /** Tenth blind held-out set (round 11, authored AFTER the gap-class
-    * growth batch): 40 sentences over six fresh registers (barber shop,
-    * pottery class, moving day, municipal pool, vet clinic, festival
-    * stalls). First-run 31/40 (77.5%); 9 lexeme gaps, 0 lattice bugs, 2
-    * author amendments where reviewed pins already recorded the opposite
-    * judgment (予防接種 atomic, 夏|祭り split), one documented authoring
-    * slip (sid 35 duplicates golden sid 1044) — itemized in the resource
-    * header. Pinned at 40/40; drives q126.
-    */
-  lazy val heldoutCorpus10: Seq[(Int, String, Seq[String])] =
-    loadHeldout("/graft/ja/heldout_corpus10.tsv")
-
-  /** Eleventh blind held-out set (pre-registered round 11, evaluated
-    * round 12): 40 sentences over six fresh registers (aquarium,
-    * bouldering, calligraphy, ferry, strawberry picking, snow shoveling).
-    * First-run 28/40 (70.0%); per the pre-registered PLANS.md caveat the
-    * two topics swept after authoring (calligraphy, ferry) each scored
-    * 5/7 = 71.4% — AT the headline, not above it. 9 lexeme gaps, 0
-    * lattice bugs, 4 author amendments (itemized in the resource
-    * header). Pinned at 40/40; drives q139.
-    */
-  lazy val heldoutCorpus11: Seq[(Int, String, Seq[String])] =
-    loadHeldout("/graft/ja/heldout_corpus11.tsv")
-
-  /** Twelfth blind held-out set (pre-registered round 11 behind the
-    * registration-time disjointness check, evaluated round 12): 40
-    * sentences over six registers chosen to avoid every round-11 sweep
-    * (bonsai, forklift, blood donation, haunted house, picture-book
-    * volunteering, orienteering). First-run 25/40 (62.5%); 7 lexeme
-    * gaps, ONE structural fix (the AdjGaru1/VSugi single-kanji adjective
-    * 語幹 classes — 怖すぎ now lemmatizes), one SHADOWED homograph call
-    * (下り→下る, JaHomographs ledger), 9 author amendments (resource
-    * header). Pinned at 40/40; drives q140.
-    */
-  lazy val heldoutCorpus12: Seq[(Int, String, Seq[String])] =
-    loadHeldout("/graft/ja/heldout_corpus12.tsv")
-
-  /** Thirteenth blind held-out set (pre-registered round 12 behind the
-    * registration-time disjointness check, evaluated round 13 BEFORE any
-    * round-13 change; topics disjoint from the post-registration probe
-    * batches 23-25, so no per-topic caveat). First-run 30/40 (75.0%);
-    * 4 lexeme gaps (防護, ふんわり, ラジオ体操, 深呼吸), 0 lattice bugs,
-    * 6 author amendments — all six the SAME convention classes already
-    * adjudicated in earlier sets (atomic 機/場/板 compounds, たて
-    * deverbal stop-filter) — itemized in the resource header. Pinned at
-    * 40/40; drives q143.
-    */
-  lazy val heldoutCorpus13: Seq[(Int, String, Seq[String])] =
-    loadHeldout("/graft/ja/heldout_corpus13.tsv")
-
-  /** Fourteenth blind held-out set (pre-registered round 13 behind the
-    * registration-time disjointness check, evaluated later in round 13
-    * BEFORE any further dictionary/lattice change; topics disjoint from
-    * the post-registration probe batches 32-33, so no per-topic caveat).
-    * First-run 21/40 (52.5%) — the lowest since set 4; all 19 diffs were
-    * lexeme-level (0 lattice bugs, 5th consecutive clean-lattice set):
-    * the register mix was dense in two-kanji lexicalized compounds the
-    * derivation layer cannot invent (熊手, 海水, 手話, 砂岩, 水平線,
-    * 霧笛, 灯台守, …). 2 author amendments (よく→よい, golden-pinned
-    * five times), 17 genuine gaps fixed incl. the 暮らし noun→deverbal
-    * retirement — itemized in the resource header. Pinned at 40/40;
-    * drives q152.
-    */
-  lazy val heldoutCorpus14: Seq[(Int, String, Seq[String])] =
-    loadHeldout("/graft/ja/heldout_corpus14.tsv")
-
-  /** Fifteenth blind held-out set (pre-registered round 13 behind the
-    * registration-time disjointness check, evaluated round 14 BEFORE any
-    * round-14 dictionary/lattice change). First-run 25/40 (62.5%); all
-    * 15 diffs lexeme-level (0 lattice bugs — 6th consecutive clean-
-    * lattice set). 4 author amendments, each against a standing pin
-    * (窓|側, += 息, 同時に lexicalized adverb, 使い方 -> 使う|方); 12
-    * genuine gaps fixed; TWO planned fixes then REJECTED by the golden
-    * replay gate (非常口 — golden pins 非常|口; 折り返し retirement —
-    * golden pins the adverb) and the set amended to the pins — itemized
-    * in the resource header. Pinned at 40/40; drives q161.
-    */
-  lazy val heldoutCorpus15: Seq[(Int, String, Seq[String])] =
-    loadHeldout("/graft/ja/heldout_corpus15.tsv")
-
-  /** Sixteenth blind held-out set (pre-registered round 14 behind the
-    * disjointness check — which caught and replaced 3 verbatim collisions
-    * at registration — and evaluated the same round, the set-14 precedent;
-    * probe batches 37-39 and the VMizen lattice class landed between
-    * registration and evaluation). First-run 31/40 (77.5%) — second-best
-    * ever; 0 lattice bugs (7th consecutive clean-lattice set). 5 author
-    * amendments (巣箱/教習所/養蜂場 standing-entry-or-pin wins, 来る
-    * kanji-lemma pins, ある+また stopwords), 6 lexeme gaps fixed, and the
-    * 養蜂 add REJECTED by held-out-13 sid 8 (9th convention-wins
-    * rejection) — itemized in the resource header. Pinned at 40/40;
-    * drives q171.
-    */
-  lazy val heldoutCorpus16: Seq[(Int, String, Seq[String])] =
-    loadHeldout("/graft/ja/heldout_corpus16.tsv")
-
-  /** Seventeenth blind held-out set (pre-registered round 14 behind the
-    * registration-time disjointness check, evaluated round 15 BEFORE any
-    * round-15 dictionary/lattice change). First-run 25/40 (62.5%).
-    * Adjudication: 11 lexeme gaps over 12 sentences (きのこ in three),
-    * 4 author amendments (stop-list とき, atomic パン屋 per golden 1440,
-    * deverbal 売り切れ/片付け per golden 593/1303), and the FIRST
-    * lattice-level miss since set 8 — も[Particle]+う[AuxU volitional]
-    * undercut the dictionary adverb もう; the Particle→AuxU hard block
-    * landed (plus the Particle→NounSuffix 300→800 counter fence the 切れ
-    * add exposed), and the stale round-7 "もう dropped" convention was
-    * retired as a misparse artifact (5 pins amended — ipadic classes もう
-    * 副詞 and the reference's default stop set does not contain it). sid
-    * 9's たろう volitional-conjecture reading recorded as a measured
-    * JaHomographs ledger trap. Pinned at 40/40; drives q181.
-    */
-  lazy val heldoutCorpus17: Seq[(Int, String, Seq[String])] =
-    loadHeldout("/graft/ja/heldout_corpus17.tsv")
-
-  /** Eighteenth blind held-out set (pre-registered round 15 behind the
-    * registration-time disjointness check — which caught and replaced 2
-    * verbatim golden collisions before any evaluation — evaluated round 16
-    * BEFORE any round-16 dictionary/lattice change). First-run 37/40
-    * (92.5%) — the best first run of all 18 sets (previous best 77.5%).
-    * Adjudication: 3 lexeme gaps (投影 sv, 明け方 adv, 白む m-row), 0
-    * author amendments (the first set where every expected line survived
-    * adjudication untouched), and TWO lattice-level findings: the
-    * AdjTerm→Adv fence (+600 — 実は stole 大きい|実|は by 300; an adverb
-    * directly after an i-adjective 基本形 mid-region implies the clause
-    * break punctuation would mark) and the VOnbin→VerbInfl/VerbTerm
-    * grammar fence (+800 — 白ん+でき(→できる)+た exactly tied the correct
-    * 白ん|で|き(→くる)|た at 2200 and won by relaxation order; the voiced
-    * 音便 stem licenses only だ/で, the same contract as VOnbin→Aux).
-    * Both replay-gated green. Pinned at 40/40; drives q186.
-    */
-  lazy val heldoutCorpus18: Seq[(Int, String, Seq[String])] =
-    loadHeldout("/graft/ja/heldout_corpus18.tsv")
-
-  /** Nineteenth blind held-out set (lost-and-found / shoe store / picnic /
-    * dentist / post office / subway registers), pre-registered round 16 and
-    * evaluated round 17 BEFORE any dictionary change: first-run 30/40 =
-    * 75.0%. Adjudication: 10 pure lexeme gaps, ZERO author amendments (the
-    * second all-expectations-survive set after 18), ZERO lattice findings —
-    * the voiced-だ case ついだ resolved by the kana つぐ lexeme alone (the
-    * existing VOnbin −800 license). Pinned at 40/40; drives q194.
-    */
-  lazy val heldoutCorpus19: Seq[(Int, String, Seq[String])] =
-    loadHeldout("/graft/ja/heldout_corpus19.tsv")
-
-  /** Twentieth blind held-out set (shrine visit / beach / electronics /
-    * stadium / tire change / power outage registers), pre-registered round
-    * 16 and evaluated round 17 after set 19, before any dictionary change:
-    * first-run 22/40 = 55.0%. Adjudication: 12 lexeme gaps, 2
-    * counter-inventory gaps (礼/塁 — single-kanji counters through the
-    * 着/部-lesson replay gate), SIX author amendments (シャワ T6 stemming,
-    * もらえる potential lexeme, しめ recorded rejection, 急に lexicalized
-    * adverb, 引き出す deverbal convention → ledger 11, よう dropped per
-    * golden 1962), ZERO lattice findings. Pinned at 40/40; drives q195.
-    */
-  lazy val heldoutCorpus20: Seq[(Int, String, Seq[String])] =
-    loadHeldout("/graft/ja/heldout_corpus20.tsv")
-
-  /** Twenty-first blind held-out set (karaoke / bowling / planetarium /
-    * hotel / car wash / garbage day registers), pre-registered round 17 and
-    * evaluated round 18 FIRST, before any dictionary change: first-run
-    * 35/40 = 87.5% — the best first-run of the trend. Adjudication: 3
-    * lexeme gaps (同じ 連体詞, kana やさしい, 貼り紙 spelling variant), TWO
-    * author amendments (お湯/お風呂 honorific strip per goldens 1576/1891;
-    * 集積所 sino+所 atomic per the 発電所/市役所 class), ZERO lattice
-    * findings. Pinned at 40/40; drives q201.
-    */
-  lazy val heldoutCorpus21: Seq[(Int, String, Seq[String])] =
-    loadHeldout("/graft/ja/heldout_corpus21.tsv")
-
-  /** Twenty-second blind held-out set (watch repair / airport / orchestra /
-    * sledding / vaccination / go club registers), pre-registered round 17
-    * and evaluated round 18 after set 21, before any dictionary change:
-    * first-run 35/40 = 87.5%. Adjudication: 2 lexeme gaps (同じ shared with
-    * set 21, 本番), TWO author amendments (滑走路/待合室 — sino+suffix
-    * atomic per goldens 1322/1511 and the 発電所 class; the claimed X室/X路
-    * split convention had no recorded precedent), and ONE LATTICE FINDING
-    * (the first since set 18): が→ぬ→れ undercut the verb stem ぬれ because
-    * the 未然-only archaic negative ぬ sat in generic Aux — now dispatched
-    * into AuxMasu beside ず (JaLattice.classOf). Pinned at 40/40; drives
-    * q202.
-    */
-  lazy val heldoutCorpus22: Seq[(Int, String, Seq[String])] =
-    loadHeldout("/graft/ja/heldout_corpus22.tsv")
-
-  /** Twenty-third blind held-out set (pizza delivery / riverside barbecue /
-    * ENT clinic / paper airplanes / flea market / apartment viewing),
-    * pre-registered round 18 and evaluated round 19 before any dictionary
-    * change: first-run 33/40 = 82.5%. Adjudication: FOUR lexeme gaps
-    * (おつり — the batch-61 contamination deferral now closed; 鼻づまり;
-    * kana おこす; 紙飛行機 per the 下駄箱 non-compositional function
-    * test), THREE author amendments (通り stays 通り per five standing
-    * golden pins 573/773/995/1727/1940; フリーマーケット recorded atomic —
-    * records win; 気|入る per golden 1836), ZERO lattice findings.
-    * Pinned at 40/40; drives q221.
-    */
-  lazy val heldoutCorpus23: Seq[(Int, String, Seq[String])] =
-    loadHeldout("/graft/ja/heldout_corpus23.tsv")
-
-  /** Twenty-fourth blind held-out set (photo studio / soba class / kite
-    * flying / sewing / tatami / bamboo-copter workshop — the original
-    * disaster-drill block swapped at registration by the disjointness
-    * check), pre-registered round 18 and evaluated round 19 after set 23,
-    * before any dictionary change: first-run 32/40 = 80.0%. Adjudication:
-    * SIX lexeme gaps over seven entries (手つき + kana まねる; 持ち手 —
-    * the author's flagged risk, 取っ手/縫い目 class holds; 竹とんぼ
-    * function test; kana くず; 両手), THREE author amendments (写真|館 —
-    * golden 1066 pins the split, flipping the first X館-sibling
-    * adjudication, the 店内 rule; 焼き増し — recorded sv shadows the
-    * deverbal reading per the 見積もり judgment; 一気 per goldens
-    * 1244/1805), ZERO lattice findings. Pinned at 40/40; drives q222.
-    */
-  lazy val heldoutCorpus24: Seq[(Int, String, Seq[String])] =
-    loadHeldout("/graft/ja/heldout_corpus24.tsv")
-
-  /** Twenty-fifth blind held-out set (wind-chime making / sake brewery /
-    * window cleaning / killifish keeping / magic show / shaved-ice stand),
-    * pre-registered round 19 and evaluated round 20 FIRST, before any
-    * dictionary change: first-run 30/40 = 75.0%. Adjudication: SEVEN lexeme
-    * gaps over 8 sentences (風鈴 — the register noun, 吊るす — the probe-71
-    * deferral closed, 新酒, 日光, 手品, 種明かし — a kanji-run UNK tear,
-    * かき氷 per the 紙飛行機 function test), THREE author amendments each
-    * citing a record (お土産 lexicalized-お entry = the header's own flagged
-    * risk; 行った→行く per JaHomographs ledger #1; 見抜ける per the set-20
-    * potentials-are-lexemes pin), ZERO lattice findings — third consecutive
-    * clean-lattice set. Pinned at 40/40; drives q229.
-    */
-  lazy val heldoutCorpus25: Seq[(Int, String, Seq[String])] =
-    loadHeldout("/graft/ja/heldout_corpus25.tsv")
-
-  /** Twenty-sixth blind held-out set (kintsugi / papermaking / shadow play /
-    * dyeing / kokeshi painting / origami), pre-registered round 19 and
-    * evaluated round 20 after set 25, still before any dictionary change:
-    * first-run 30/40 = 75.0%. Adjudication: EIGHT lexeme gaps (金継ぎ,
-    * 紙すき, kana すく k-row, 影絵, 染め物, つなぎ目, 折り紙, 折り目 — five
-    * of the eight were the author's own flagged risks), THREE author
-    * amendments each citing a record (お茶 per goldens 251/1025/1237/1685/
-    * 1691; 一緒に per goldens 370/1217/2135; ごと KEPT per goldens
-    * 968/1710/2217 — the drop-ごと expectation had no precedent), ZERO
-    * lattice findings — fourth consecutive clean-lattice set. Pinned at
-    * 40/40; drives q230.
-    */
-  lazy val heldoutCorpus26: Seq[(Int, String, Seq[String])] =
-    loadHeldout("/graft/ja/heldout_corpus26.tsv")
-
-  private def loadHeldout(res: String): Seq[(Int, String, Seq[String])] = {
-    val in = getClass.getResourceAsStream(res)
-    require(in != null, s"missing resource $res")
-    scala.io.Source.fromInputStream(in, "UTF-8").getLines()
-      .map(_.trim).filter(l => l.nonEmpty && !l.startsWith("#"))
-      .zipWithIndex.map { case (l, i) =>
-        require(!l.contains("'"), s"$res line contains a quote")
-        val f = l.split("\t", -1)
-        require(f.length == 2, s"$res line ${i + 1}: expected 2 fields, got ${f.length}")
-        (i + 1, f(0), f(1).split("\\|").toSeq)
-      }.toSeq
+    def oracleSql: String = literalTable(rows.map { case (sid, _, toks) => (sid, toks) })
   }
 
-  def heldoutOracleSql: String =
-    literalTable(heldoutCorpus.map { case (sid, _, toks) => (sid, toks) })
-  def heldout2OracleSql: String =
-    literalTable(heldoutCorpus2.map { case (sid, _, toks) => (sid, toks) })
-  def heldout3OracleSql: String =
-    literalTable(heldoutCorpus3.map { case (sid, _, toks) => (sid, toks) })
-  def heldout4OracleSql: String =
-    literalTable(heldoutCorpus4.map { case (sid, _, toks) => (sid, toks) })
-  def heldout5OracleSql: String =
-    literalTable(heldoutCorpus5.map { case (sid, _, toks) => (sid, toks) })
-  def heldout6OracleSql: String =
-    literalTable(heldoutCorpus6.map { case (sid, _, toks) => (sid, toks) })
-  def heldout7OracleSql: String =
-    literalTable(heldoutCorpus7.map { case (sid, _, toks) => (sid, toks) })
-  def heldout8OracleSql: String =
-    literalTable(heldoutCorpus8.map { case (sid, _, toks) => (sid, toks) })
-  def heldout9OracleSql: String =
-    literalTable(heldoutCorpus9.map { case (sid, _, toks) => (sid, toks) })
-  def heldout10OracleSql: String =
-    literalTable(heldoutCorpus10.map { case (sid, _, toks) => (sid, toks) })
-  def heldout11OracleSql: String =
-    literalTable(heldoutCorpus11.map { case (sid, _, toks) => (sid, toks) })
-  def heldout12OracleSql: String =
-    literalTable(heldoutCorpus12.map { case (sid, _, toks) => (sid, toks) })
-  def heldout13OracleSql: String =
-    literalTable(heldoutCorpus13.map { case (sid, _, toks) => (sid, toks) })
-  def heldout14OracleSql: String =
-    literalTable(heldoutCorpus14.map { case (sid, _, toks) => (sid, toks) })
-  def heldout15OracleSql: String =
-    literalTable(heldoutCorpus15.map { case (sid, _, toks) => (sid, toks) })
-  def heldout16OracleSql: String =
-    literalTable(heldoutCorpus16.map { case (sid, _, toks) => (sid, toks) })
-  def heldout17OracleSql: String =
-    literalTable(heldoutCorpus17.map { case (sid, _, toks) => (sid, toks) })
-  def heldout18OracleSql: String =
-    literalTable(heldoutCorpus18.map { case (sid, _, toks) => (sid, toks) })
-  def heldout19OracleSql: String =
-    literalTable(heldoutCorpus19.map { case (sid, _, toks) => (sid, toks) })
-  def heldout20OracleSql: String =
-    literalTable(heldoutCorpus20.map { case (sid, _, toks) => (sid, toks) })
-  def heldout21OracleSql: String =
-    literalTable(heldoutCorpus21.map { case (sid, _, toks) => (sid, toks) })
-  def heldout22OracleSql: String =
-    literalTable(heldoutCorpus22.map { case (sid, _, toks) => (sid, toks) })
-  def heldout23OracleSql: String =
-    literalTable(heldoutCorpus23.map { case (sid, _, toks) => (sid, toks) })
-  def heldout24OracleSql: String =
-    literalTable(heldoutCorpus24.map { case (sid, _, toks) => (sid, toks) })
-  def heldout25OracleSql: String =
-    literalTable(heldoutCorpus25.map { case (sid, _, toks) => (sid, toks) })
-  def heldout26OracleSql: String =
-    literalTable(heldoutCorpus26.map { case (sid, _, toks) => (sid, toks) })
+  /** The evaluated held-out sets, in evaluation order. Sets 27 and 28 are
+    * pre-registered and not yet evaluated, so they have no row.
+    */
+  val heldout: Seq[Heldout] = Seq(
+    Heldout(1, "q101_tokenize_ja_heldout", 98),
+    Heldout(2, "q105_tokenize_ja_heldout2", 60),
+    Heldout(3, "q106_tokenize_ja_heldout3", 30),
+    Heldout(4, "q107_tokenize_ja_heldout4", 40),
+    Heldout(5, "q113_tokenize_ja_heldout5", 42),
+    Heldout(6, "q119_tokenize_ja_heldout6", 40),
+    Heldout(7, "q122_tokenize_ja_heldout7", 40),
+    Heldout(8, "q123_tokenize_ja_heldout8", 40),
+    // one authoring slip each: set 9 sid 38 = golden 1236, set 10 sid 35 = golden 1044
+    Heldout(9, "q124_tokenize_ja_heldout9", 40, Set("落ち葉を踏む音が心地よかった。")),
+    Heldout(10, "q126_tokenize_ja_heldout10", 40, Set("夏祭りの屋台で焼きそばを買った。")),
+    Heldout(11, "q139_tokenize_ja_heldout11", 40),
+    Heldout(12, "q140_tokenize_ja_heldout12", 40),
+    Heldout(13, "q143_tokenize_ja_heldout13", 40),
+    Heldout(14, "q152_tokenize_ja_heldout14", 40),
+    Heldout(15, "q161_tokenize_ja_heldout15", 40),
+    Heldout(16, "q171_tokenize_ja_heldout16", 40),
+    Heldout(17, "q181_tokenize_ja_heldout17", 40),
+    Heldout(18, "q186_tokenize_ja_heldout18", 40),
+    Heldout(19, "q194_tokenize_ja_heldout19", 40),
+    Heldout(20, "q195_tokenize_ja_heldout20", 40),
+    Heldout(21, "q201_tokenize_ja_heldout21", 40),
+    Heldout(22, "q202_tokenize_ja_heldout22", 40),
+    Heldout(23, "q221_tokenize_ja_heldout23", 40),
+    Heldout(24, "q222_tokenize_ja_heldout24", 40),
+    Heldout(25, "q229_tokenize_ja_heldout25", 40),
+    Heldout(26, "q230_tokenize_ja_heldout26", 40))
+
+  def heldoutSet(set: Int): Heldout =
+    heldout.find(_.set == set).getOrElse(
+      throw new IllegalArgumentException(s"no evaluated held-out set $set"))
 
   /** q56/q57 oracles: literal tables of the reviewed SEARCH/EXTENDED rows. */
   def searchOracleSql: String =

@@ -272,10 +272,14 @@ object Retrieval {
     val rels = candRows.map(_.getLong(2))
     val cds = candRows.map(_.getSeq[Long](3).toArray)
     val n = candRows.length
+    // a dot over mismatched dimensions has no meaning: fail rather than
+    // truncate to the shorter vector and return a wrong MMR order
+    require(cds.forall(_.length == cds(0).length),
+      "mmrDiversify: candidate embeddings differ in dimension: " +
+        ids.zip(cds).map { case (id, c) => s"$id:${c.length}" }.mkString(", "))
     def dot(x: Array[Long], y: Array[Long]): Long = {
       var s = 0L; var i = 0
-      val m = math.min(x.length, y.length)
-      while (i < m) { s += x(i) * y(i); i += 1 }
+      while (i < x.length) { s += x(i) * y(i); i += 1 }
       s
     }
     // greedy loop — the exact integer recurrence of the r21 distributed

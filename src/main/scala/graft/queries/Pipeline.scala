@@ -1,5 +1,6 @@
 package graft.queries
 
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 
 import graft.operators.{Clustering, Dedup, Graph, IvfIndex, Temporal, Layout, Multimodal, Privacy, Retrieval, Robust, Sampling, Similarity, TextAnalysis}
@@ -629,6 +630,22 @@ object Pipeline {
       .orderBy("user_id", "click_id")
   }
 
+  /** The body of every pinned-tokenization query: reviewed `(sid, sentence)`
+    * rows run through `tokenize` on executors, one `(sid, n_toks, tokens)`
+    * row per sentence in sid order, against a literal-table oracle of the
+    * reviewed expectations. `rows` is read inside the query run.
+    */
+  private def tokenizeRows(name: String, oracle: String, rows: => Seq[(Int, String)])(
+      tokenize: Column => Column): Q =
+    Q(name, oracle) { (s, dir) =>
+      graft.Graft.register(s)
+      s.createDataFrame(rows).toDF("sid", "sentence")
+        .select(col("sid"), tokenize(col("sentence")).as("toks"))
+        .select(col("sid"), size(col("toks")).as("n_toks"),
+          concat_ws("|", col("toks")).as("tokens"))
+        .orderBy("sid")
+    }
+
   /** Real-Japanese tokenization inside the correctness gate: the 122
     * hand-reviewed golden sentences run through the full analyzer chain
     * (Viterbi lattice + T2–T7 filters) on executors, and the DuckDB oracle
@@ -637,15 +654,20 @@ object Pipeline {
     * hash-compare, not just ScalaTest. Mixed-script coverage: kanji,
     * hiragana function words, katakana loanwords, Latin (SNS), digits.
     */
-  val q55 = Q("q55_tokenize_ja_golden", graft.ja.JaGolden.oracleSql) { (s, dir) =>
-    graft.Graft.register(s)
-    val corpus = graft.ja.JaGolden.corpus.map(g => (g.sid, g.sentence))
-    s.createDataFrame(corpus).toDF("sid", "sentence")
-      .select(col("sid"),
-        graft.functions.tokenize_ja_neologd(col("sentence")).as("toks"))
-      .select(col("sid"), size(col("toks")).as("n_toks"),
-        concat_ws("|", col("toks")).as("tokens"))
-      .orderBy("sid")
+  val q55 = tokenizeRows("q55_tokenize_ja_golden", graft.ja.JaGolden.oracleSql,
+    graft.ja.JaGolden.corpus.map(g => (g.sid, g.sentence)))(
+    graft.functions.tokenize_ja_neologd(_))
+
+  /** Blind held-out conformance inside the oracle gate: each evaluated set
+    * of `JaGolden.heldout` runs through the full analyzer chain against its
+    * literal-table oracle — the out-of-sample counterpart to q55's
+    * development corpus, mirroring the reference's arbitrary-news-text
+    * robustness tests (KuromojiNEologdUDFTest.java:202-259). Protocol,
+    * first-run rate and adjudication are in each set's resource header.
+    */
+  private val heldout: Seq[Q] = graft.ja.JaGolden.heldout.map { h =>
+    tokenizeRows(h.query, h.oracleSql, h.rows.map { case (sid, sentence, _) => (sid, sentence) })(
+      graft.functions.tokenize_ja_neologd(_))
   }
 
   /** SEARCH/EXTENDED modes under the oracle (VERDICT r2 "Next round" #4):
@@ -658,16 +680,8 @@ object Pipeline {
   private def modeGolden(
       name: String, mode: String,
       subset: Seq[(Int, String, Seq[String])], oracle: String): Q =
-    Q(name, oracle) { (s, dir) =>
-      graft.Graft.register(s)
-      s.createDataFrame(subset.map { case (sid, sentence, _) => (sid, sentence) })
-        .toDF("sid", "sentence")
-        .select(col("sid"),
-          graft.functions.tokenize_ja_neologd(col("sentence"), mode).as("toks"))
-        .select(col("sid"), size(col("toks")).as("n_toks"),
-          concat_ws("|", col("toks")).as("tokens"))
-        .orderBy("sid")
-    }
+    tokenizeRows(name, oracle, subset.map { case (sid, sentence, _) => (sid, sentence) })(
+      graft.functions.tokenize_ja_neologd(_, mode))
 
   val q56 = modeGolden("q56_tokenize_ja_search", "SEARCH",
     graft.ja.JaGolden.searchSubset, graft.ja.JaGolden.searchOracleSql)
@@ -679,17 +693,9 @@ object Pipeline {
     * morpheme stream with base forms, pinned against reviewed rows like
     * q55-q57.
     */
-  val q60 = Q("q60_tokenize_ja_nostop", graft.ja.JaGolden.nostopOracleSql) { (s, dir) =>
-    graft.Graft.register(s)
-    s.createDataFrame(graft.ja.JaGolden.nostopSubset.map { case (sid, sentence, _) => (sid, sentence) })
-      .toDF("sid", "sentence")
-      .select(col("sid"),
-        graft.functions.tokenize_ja_neologd(
-          col("sentence"), "NORMAL", Seq.empty, Seq.empty).as("toks"))
-      .select(col("sid"), size(col("toks")).as("n_toks"),
-        concat_ws("|", col("toks")).as("tokens"))
-      .orderBy("sid")
-  }
+  val q60 = tokenizeRows("q60_tokenize_ja_nostop", graft.ja.JaGolden.nostopOracleSql,
+    graft.ja.JaGolden.nostopSubset.map { case (sid, sentence, _) => (sid, sentence) })(
+    graft.functions.tokenize_ja_neologd(_, "NORMAL", Seq.empty, Seq.empty))
 
   /** User-dictionary override (reference A6, UDF:102-104, 230-249 and its
     * own golden TEST:279-299: 日本経済新聞 with a user dict row segments to
@@ -698,28 +704,21 @@ object Pipeline {
     * in every mode. Pinned as a literal-table oracle over sentences where
     * the embedded dictionary alone would segment differently.
     */
-  val q61 = Q(
+  val q61 = tokenizeRows(
     "q61_tokenize_ja_userdict",
     """SELECT * FROM (VALUES
       |  (1, 3, '日本|経済|新聞'),
       |  (2, 5, '日本|経済|新聞|記事|読む'),
       |  (3, 3, 'グラフト|エンジン|速い')
-      |) AS t(sid, n_toks, tokens) ORDER BY sid""".stripMargin) { (s, dir) =>
-    graft.Graft.register(s)
-    val userDict = Seq(
-      "日本経済新聞,日本 経済 新聞,ニホン ケイザイ シンブン,カスタム名詞",
-      "グラフトエンジン,グラフト エンジン,グラフト エンジン,カスタム名詞")
-    val rows = Seq(
+      |) AS t(sid, n_toks, tokens) ORDER BY sid""".stripMargin,
+    Seq(
       (1, "日本経済新聞。"),           // user segmentation overrides the whole-entity entry
       (2, "日本経済新聞の記事を読む。"), // …in context
       (3, "グラフトエンジンは速い。"))   // user entry over pure-unknown text
-    s.createDataFrame(rows).toDF("sid", "sentence")
-      .select(col("sid"),
-        graft.functions.tokenize_ja_neologd(
-          col("sentence"), "NORMAL", null, null, userDict).as("toks"))
-      .select(col("sid"), size(col("toks")).as("n_toks"),
-        concat_ws("|", col("toks")).as("tokens"))
-      .orderBy("sid")
+  ) { sentence =>
+    graft.functions.tokenize_ja_neologd(sentence, "NORMAL", null, null, Seq(
+      "日本経済新聞,日本 経済 新聞,ニホン ケイザイ シンブン,カスタム名詞",
+      "グラフトエンジン,グラフト エンジン,グラフト エンジン,カスタム名詞"))
   }
 
   /** Zero-arg version introspection (reference A11, UDF:121-129: the call
@@ -1455,78 +1454,6 @@ object Pipeline {
       .orderBy("user_id")
   }
 
-  /** Held-out conformance inside the driver gate (VERDICT r6 "Next round"
-    * #2): the blind-authored 98-sentence evaluation corpus runs through the
-    * full analyzer chain on executors against its literal-table oracle —
-    * the out-of-sample counterpart to q55's development corpus, mirroring
-    * the reference's arbitrary-news-text robustness tests
-    * (KuromojiNEologdUDFTest.java:202-259). First-run rate before any fix:
-    * 63/98 (protocol + adjudication in the resource header and SURVEY §7.4).
-    */
-  val q101 = Q("q101_tokenize_ja_heldout", graft.ja.JaGolden.heldoutOracleSql) { (s, dir) =>
-    graft.Graft.register(s)
-    s.createDataFrame(graft.ja.JaGolden.heldoutCorpus.map { case (sid, sentence, _) => (sid, sentence) })
-      .toDF("sid", "sentence")
-      .select(col("sid"),
-        graft.functions.tokenize_ja_neologd(col("sentence")).as("toks"))
-      .select(col("sid"), size(col("toks")).as("n_toks"),
-        concat_ws("|", col("toks")).as("tokens"))
-      .orderBy("sid")
-  }
-
-  /** Second blind held-out set (round 7): 60 fresh-register sentences
-    * authored AFTER the first set's fixes, measuring whether those fixes
-    * generalized or just patched the first sample. First-run rate before
-    * any fix: 38/60 (63.3%) — the same ~two-thirds as the first set,
-    * so the out-of-sample rate is a stable property of the dictionary
-    * (protocol + adjudication in the resource header and SURVEY §7.4).
-    */
-  val q105 = Q("q105_tokenize_ja_heldout2", graft.ja.JaGolden.heldout2OracleSql) { (s, dir) =>
-    graft.Graft.register(s)
-    s.createDataFrame(graft.ja.JaGolden.heldoutCorpus2.map { case (sid, sentence, _) => (sid, sentence) })
-      .toDF("sid", "sentence")
-      .select(col("sid"),
-        graft.functions.tokenize_ja_neologd(col("sentence")).as("toks"))
-      .select(col("sid"), size(col("toks")).as("n_toks"),
-        concat_ws("|", col("toks")).as("tokens"))
-      .orderBy("sid")
-  }
-
-  /** Third blind held-out set (round 7): authored after the derived
-    * compound-verb layer to measure its effect on out-of-sample text.
-    * First-run 15/30 exposed the missing auxiliaries and the aux-as-V1
-    * hole; post-fix 30/30 (adjudication in the resource header).
-    */
-  val q106 = Q("q106_tokenize_ja_heldout3", graft.ja.JaGolden.heldout3OracleSql) { (s, dir) =>
-    graft.Graft.register(s)
-    s.createDataFrame(graft.ja.JaGolden.heldoutCorpus3.map { case (sid, sentence, _) => (sid, sentence) })
-      .toDF("sid", "sentence")
-      .select(col("sid"),
-        graft.functions.tokenize_ja_neologd(col("sentence")).as("toks"))
-      .select(col("sid"), size(col("toks")).as("n_toks"),
-        concat_ws("|", col("toks")).as("tokens"))
-      .orderBy("sid")
-  }
-
-  /** Fourth blind held-out set (round 7): authored after the auxiliary
-    * expansion, over six fresh registers (wedding, conveyor sushi,
-    * disaster drill, hair salon, parcel delivery, stargazing); 2 of the 42
-    * authored sentences duplicated golden sentences and were dropped as not
-    * out-of-sample. First-run 19/40 (47.5%); post-adjudication 40/40
-    * (resource header + SURVEY §7.4 record the split of convention
-    * conflicts vs genuine gaps).
-    */
-  val q107 = Q("q107_tokenize_ja_heldout4", graft.ja.JaGolden.heldout4OracleSql) { (s, dir) =>
-    graft.Graft.register(s)
-    s.createDataFrame(graft.ja.JaGolden.heldoutCorpus4.map { case (sid, sentence, _) => (sid, sentence) })
-      .toDF("sid", "sentence")
-      .select(col("sid"),
-        graft.functions.tokenize_ja_neologd(col("sentence")).as("toks"))
-      .select(col("sid"), size(col("toks")).as("n_toks"),
-        concat_ws("|", col("toks")).as("tokens"))
-      .orderBy("sid")
-  }
-
   /** Composed curation pipeline (q114): normalize → length/repetition
     * gates → exact-dedup-first-wins, one verdict row per document. The
     * oracle chains the same stages as CTEs; `pass_dup` is an int/int
@@ -1731,50 +1658,6 @@ object Pipeline {
       .orderBy("id")
   }
 
-  val q119 = Q("q119_tokenize_ja_heldout6", graft.ja.JaGolden.heldout6OracleSql) { (s, dir) =>
-    graft.Graft.register(s)
-    s.createDataFrame(graft.ja.JaGolden.heldoutCorpus6.map { case (sid, sentence, _) => (sid, sentence) })
-      .toDF("sid", "sentence")
-      .select(col("sid"),
-        graft.functions.tokenize_ja_neologd(col("sentence")).as("toks"))
-      .select(col("sid"), size(col("toks")).as("n_toks"),
-        concat_ws("|", col("toks")).as("tokens"))
-      .orderBy("sid")
-  }
-
-  val q122 = Q("q122_tokenize_ja_heldout7", graft.ja.JaGolden.heldout7OracleSql) { (s, dir) =>
-    graft.Graft.register(s)
-    s.createDataFrame(graft.ja.JaGolden.heldoutCorpus7.map { case (sid, sentence, _) => (sid, sentence) })
-      .toDF("sid", "sentence")
-      .select(col("sid"),
-        graft.functions.tokenize_ja_neologd(col("sentence")).as("toks"))
-      .select(col("sid"), size(col("toks")).as("n_toks"),
-        concat_ws("|", col("toks")).as("tokens"))
-      .orderBy("sid")
-  }
-
-  val q123 = Q("q123_tokenize_ja_heldout8", graft.ja.JaGolden.heldout8OracleSql) { (s, dir) =>
-    graft.Graft.register(s)
-    s.createDataFrame(graft.ja.JaGolden.heldoutCorpus8.map { case (sid, sentence, _) => (sid, sentence) })
-      .toDF("sid", "sentence")
-      .select(col("sid"),
-        graft.functions.tokenize_ja_neologd(col("sentence")).as("toks"))
-      .select(col("sid"), size(col("toks")).as("n_toks"),
-        concat_ws("|", col("toks")).as("tokens"))
-      .orderBy("sid")
-  }
-
-  val q124 = Q("q124_tokenize_ja_heldout9", graft.ja.JaGolden.heldout9OracleSql) { (s, dir) =>
-    graft.Graft.register(s)
-    s.createDataFrame(graft.ja.JaGolden.heldoutCorpus9.map { case (sid, sentence, _) => (sid, sentence) })
-      .toDF("sid", "sentence")
-      .select(col("sid"),
-        graft.functions.tokenize_ja_neologd(col("sentence")).as("toks"))
-      .select(col("sid"), size(col("toks")).as("n_toks"),
-        concat_ws("|", col("toks")).as("tokens"))
-      .orderBy("sid")
-  }
-
   /** q125: the blocked fuzzy-match scale path (VERDICT r10 #6). q94 keeps
     * the exact bounded theta self-join as the semantics twin; this runs the
     * SAME record-linkage primitive behind prefix/suffix blocking equi-joins
@@ -1796,17 +1679,6 @@ object Pipeline {
       .select(col("doc_id"), substring(col("text"), 1, 30).as("head"))
     Dedup.fuzzyMatchBlocked(heads, "doc_id", "head", blockLen = 4, maxDist = 6)
       .orderBy("ka", "kb")
-  }
-
-  val q126 = Q("q126_tokenize_ja_heldout10", graft.ja.JaGolden.heldout10OracleSql) { (s, dir) =>
-    graft.Graft.register(s)
-    s.createDataFrame(graft.ja.JaGolden.heldoutCorpus10.map { case (sid, sentence, _) => (sid, sentence) })
-      .toDF("sid", "sentence")
-      .select(col("sid"),
-        graft.functions.tokenize_ja_neologd(col("sentence")).as("toks"))
-      .select(col("sid"), size(col("toks")).as("n_toks"),
-        concat_ws("|", col("toks")).as("tokens"))
-      .orderBy("sid")
   }
 
   /** BM25 retrieval (q127): the ranked-search stage over the whitespace
@@ -2640,50 +2512,6 @@ object Pipeline {
       "doc_id", "text", Bm25Terms, kLex = 20, kSel = 8,
       lamNum = 6L, lamDen = 10L, relUnit = 2000L)
       .orderBy("pick")
-  }
-
-  val q139 = Q("q139_tokenize_ja_heldout11", graft.ja.JaGolden.heldout11OracleSql) { (s, dir) =>
-    graft.Graft.register(s)
-    s.createDataFrame(graft.ja.JaGolden.heldoutCorpus11.map { case (sid, sentence, _) => (sid, sentence) })
-      .toDF("sid", "sentence")
-      .select(col("sid"),
-        graft.functions.tokenize_ja_neologd(col("sentence")).as("toks"))
-      .select(col("sid"), size(col("toks")).as("n_toks"),
-        concat_ws("|", col("toks")).as("tokens"))
-      .orderBy("sid")
-  }
-
-  val q140 = Q("q140_tokenize_ja_heldout12", graft.ja.JaGolden.heldout12OracleSql) { (s, dir) =>
-    graft.Graft.register(s)
-    s.createDataFrame(graft.ja.JaGolden.heldoutCorpus12.map { case (sid, sentence, _) => (sid, sentence) })
-      .toDF("sid", "sentence")
-      .select(col("sid"),
-        graft.functions.tokenize_ja_neologd(col("sentence")).as("toks"))
-      .select(col("sid"), size(col("toks")).as("n_toks"),
-        concat_ws("|", col("toks")).as("tokens"))
-      .orderBy("sid")
-  }
-
-  val q143 = Q("q143_tokenize_ja_heldout13", graft.ja.JaGolden.heldout13OracleSql) { (s, dir) =>
-    graft.Graft.register(s)
-    s.createDataFrame(graft.ja.JaGolden.heldoutCorpus13.map { case (sid, sentence, _) => (sid, sentence) })
-      .toDF("sid", "sentence")
-      .select(col("sid"),
-        graft.functions.tokenize_ja_neologd(col("sentence")).as("toks"))
-      .select(col("sid"), size(col("toks")).as("n_toks"),
-        concat_ws("|", col("toks")).as("tokens"))
-      .orderBy("sid")
-  }
-
-  val q152 = Q("q152_tokenize_ja_heldout14", graft.ja.JaGolden.heldout14OracleSql) { (s, dir) =>
-    graft.Graft.register(s)
-    s.createDataFrame(graft.ja.JaGolden.heldoutCorpus14.map { case (sid, sentence, _) => (sid, sentence) })
-      .toDF("sid", "sentence")
-      .select(col("sid"),
-        graft.functions.tokenize_ja_neologd(col("sentence")).as("toks"))
-      .select(col("sid"), size(col("toks")).as("n_toks"),
-        concat_ws("|", col("toks")).as("tokens"))
-      .orderBy("sid")
   }
 
   /** Exact distributed integer k-means (q162): k=4, 2 full Lloyd cycles
@@ -3833,138 +3661,6 @@ object Pipeline {
       .orderBy("id")
   }
 
-  val q201 = Q("q201_tokenize_ja_heldout21", graft.ja.JaGolden.heldout21OracleSql) { (s, dir) =>
-    graft.Graft.register(s)
-    s.createDataFrame(graft.ja.JaGolden.heldoutCorpus21.map { case (sid, sentence, _) => (sid, sentence) })
-      .toDF("sid", "sentence")
-      .select(col("sid"),
-        graft.functions.tokenize_ja_neologd(col("sentence")).as("toks"))
-      .select(col("sid"), size(col("toks")).as("n_toks"),
-        concat_ws("|", col("toks")).as("tokens"))
-      .orderBy("sid")
-  }
-
-  val q202 = Q("q202_tokenize_ja_heldout22", graft.ja.JaGolden.heldout22OracleSql) { (s, dir) =>
-    graft.Graft.register(s)
-    s.createDataFrame(graft.ja.JaGolden.heldoutCorpus22.map { case (sid, sentence, _) => (sid, sentence) })
-      .toDF("sid", "sentence")
-      .select(col("sid"),
-        graft.functions.tokenize_ja_neologd(col("sentence")).as("toks"))
-      .select(col("sid"), size(col("toks")).as("n_toks"),
-        concat_ws("|", col("toks")).as("tokens"))
-      .orderBy("sid")
-  }
-
-  val q221 = Q("q221_tokenize_ja_heldout23", graft.ja.JaGolden.heldout23OracleSql) { (s, dir) =>
-    graft.Graft.register(s)
-    s.createDataFrame(graft.ja.JaGolden.heldoutCorpus23.map { case (sid, sentence, _) => (sid, sentence) })
-      .toDF("sid", "sentence")
-      .select(col("sid"),
-        graft.functions.tokenize_ja_neologd(col("sentence")).as("toks"))
-      .select(col("sid"), size(col("toks")).as("n_toks"),
-        concat_ws("|", col("toks")).as("tokens"))
-      .orderBy("sid")
-  }
-
-  val q222 = Q("q222_tokenize_ja_heldout24", graft.ja.JaGolden.heldout24OracleSql) { (s, dir) =>
-    graft.Graft.register(s)
-    s.createDataFrame(graft.ja.JaGolden.heldoutCorpus24.map { case (sid, sentence, _) => (sid, sentence) })
-      .toDF("sid", "sentence")
-      .select(col("sid"),
-        graft.functions.tokenize_ja_neologd(col("sentence")).as("toks"))
-      .select(col("sid"), size(col("toks")).as("n_toks"),
-        concat_ws("|", col("toks")).as("tokens"))
-      .orderBy("sid")
-  }
-
-  val q229 = Q("q229_tokenize_ja_heldout25", graft.ja.JaGolden.heldout25OracleSql) { (s, dir) =>
-    graft.Graft.register(s)
-    s.createDataFrame(graft.ja.JaGolden.heldoutCorpus25.map { case (sid, sentence, _) => (sid, sentence) })
-      .toDF("sid", "sentence")
-      .select(col("sid"),
-        graft.functions.tokenize_ja_neologd(col("sentence")).as("toks"))
-      .select(col("sid"), size(col("toks")).as("n_toks"),
-        concat_ws("|", col("toks")).as("tokens"))
-      .orderBy("sid")
-  }
-
-  val q230 = Q("q230_tokenize_ja_heldout26", graft.ja.JaGolden.heldout26OracleSql) { (s, dir) =>
-    graft.Graft.register(s)
-    s.createDataFrame(graft.ja.JaGolden.heldoutCorpus26.map { case (sid, sentence, _) => (sid, sentence) })
-      .toDF("sid", "sentence")
-      .select(col("sid"),
-        graft.functions.tokenize_ja_neologd(col("sentence")).as("toks"))
-      .select(col("sid"), size(col("toks")).as("n_toks"),
-        concat_ws("|", col("toks")).as("tokens"))
-      .orderBy("sid")
-  }
-
-  val q194 = Q("q194_tokenize_ja_heldout19", graft.ja.JaGolden.heldout19OracleSql) { (s, dir) =>
-    graft.Graft.register(s)
-    s.createDataFrame(graft.ja.JaGolden.heldoutCorpus19.map { case (sid, sentence, _) => (sid, sentence) })
-      .toDF("sid", "sentence")
-      .select(col("sid"),
-        graft.functions.tokenize_ja_neologd(col("sentence")).as("toks"))
-      .select(col("sid"), size(col("toks")).as("n_toks"),
-        concat_ws("|", col("toks")).as("tokens"))
-      .orderBy("sid")
-  }
-
-  val q195 = Q("q195_tokenize_ja_heldout20", graft.ja.JaGolden.heldout20OracleSql) { (s, dir) =>
-    graft.Graft.register(s)
-    s.createDataFrame(graft.ja.JaGolden.heldoutCorpus20.map { case (sid, sentence, _) => (sid, sentence) })
-      .toDF("sid", "sentence")
-      .select(col("sid"),
-        graft.functions.tokenize_ja_neologd(col("sentence")).as("toks"))
-      .select(col("sid"), size(col("toks")).as("n_toks"),
-        concat_ws("|", col("toks")).as("tokens"))
-      .orderBy("sid")
-  }
-
-  val q186 = Q("q186_tokenize_ja_heldout18", graft.ja.JaGolden.heldout18OracleSql) { (s, dir) =>
-    graft.Graft.register(s)
-    s.createDataFrame(graft.ja.JaGolden.heldoutCorpus18.map { case (sid, sentence, _) => (sid, sentence) })
-      .toDF("sid", "sentence")
-      .select(col("sid"),
-        graft.functions.tokenize_ja_neologd(col("sentence")).as("toks"))
-      .select(col("sid"), size(col("toks")).as("n_toks"),
-        concat_ws("|", col("toks")).as("tokens"))
-      .orderBy("sid")
-  }
-
-  val q181 = Q("q181_tokenize_ja_heldout17", graft.ja.JaGolden.heldout17OracleSql) { (s, dir) =>
-    graft.Graft.register(s)
-    s.createDataFrame(graft.ja.JaGolden.heldoutCorpus17.map { case (sid, sentence, _) => (sid, sentence) })
-      .toDF("sid", "sentence")
-      .select(col("sid"),
-        graft.functions.tokenize_ja_neologd(col("sentence")).as("toks"))
-      .select(col("sid"), size(col("toks")).as("n_toks"),
-        concat_ws("|", col("toks")).as("tokens"))
-      .orderBy("sid")
-  }
-
-  val q171 = Q("q171_tokenize_ja_heldout16", graft.ja.JaGolden.heldout16OracleSql) { (s, dir) =>
-    graft.Graft.register(s)
-    s.createDataFrame(graft.ja.JaGolden.heldoutCorpus16.map { case (sid, sentence, _) => (sid, sentence) })
-      .toDF("sid", "sentence")
-      .select(col("sid"),
-        graft.functions.tokenize_ja_neologd(col("sentence")).as("toks"))
-      .select(col("sid"), size(col("toks")).as("n_toks"),
-        concat_ws("|", col("toks")).as("tokens"))
-      .orderBy("sid")
-  }
-
-  val q161 = Q("q161_tokenize_ja_heldout15", graft.ja.JaGolden.heldout15OracleSql) { (s, dir) =>
-    graft.Graft.register(s)
-    s.createDataFrame(graft.ja.JaGolden.heldoutCorpus15.map { case (sid, sentence, _) => (sid, sentence) })
-      .toDF("sid", "sentence")
-      .select(col("sid"),
-        graft.functions.tokenize_ja_neologd(col("sentence")).as("toks"))
-      .select(col("sid"), size(col("toks")).as("n_toks"),
-        concat_ws("|", col("toks")).as("tokens"))
-      .orderBy("sid")
-  }
-
   /** Exact word-token Jaccard self-join at t = 1/2 via AllPairs/PPJoin
     * prefix filtering (engine side); the oracle brute-forces every
     * shared-token pair — an independent derivation, so a prefix-filter
@@ -4257,17 +3953,6 @@ object Pipeline {
     Robust.trimmedMeanReport(r, "v", Seq("grp"), permille = 50,
         tieCols = Seq("l_orderkey", "l_linenumber"))
       .orderBy("grp")
-  }
-
-  val q113 = Q("q113_tokenize_ja_heldout5", graft.ja.JaGolden.heldout5OracleSql) { (s, dir) =>
-    graft.Graft.register(s)
-    s.createDataFrame(graft.ja.JaGolden.heldoutCorpus5.map { case (sid, sentence, _) => (sid, sentence) })
-      .toDF("sid", "sentence")
-      .select(col("sid"),
-        graft.functions.tokenize_ja_neologd(col("sentence")).as("toks"))
-      .select(col("sid"), size(col("toks")).as("n_toks"),
-        concat_ws("|", col("toks")).as("tokens"))
-      .orderBy("sid")
   }
 
   /** C4-style duplicated-span removal (q108): 10-word spans, first
@@ -6073,5 +5758,6 @@ object Pipeline {
     q40, q41, q42, q43, q44, q45, q46, q47, q48, q49, q50, q51, q52, q53, q54,
     q55, q56, q57, q58, q59, q60, q61, q62, q63, q64, q65, q66, q67, q68,
     q69, q70, q71, q72, q73, q74, q75, q79, q80, q85, q87, q88, q89, q96,
-    q97, q98, q99, q100, q101, q102, q103, q104, q105, q106, q107, q108, q109, q110, q111, q112, q113, q114, q115, q116, q117, q118, q119, q120, q121, q122, q123, q124, q125, q126, q127, q128, q129, q130, q131, q132, q133, q134, q135, q136, q137, q138, q139, q140, q141, q142, q143, q144, q145, q146, q147, q148, q149, q150, q151, q152, q153, q154, q155, q156, q157, q158, q159, q160, q161, q162, q163, q164, q165, q166, q167, q168, q169, q170, q171, q172, q173, q174, q175, q176, q177, q178, q179, q180, q181, q182, q183, q184, q185, q186, q187, q188, q189, q190, q191, q192, q193, q194, q195, q196, q197, q198, q199, q200, q201, q202, q203, q204, q205, q206, q207, q208, q209, q210, q211, q212, q213, q214, q215, q216, q217, q218, q219, q220, q221, q222, q223, q224, q225, q226, q227, q228, q229, q230, q231, q232, q233, q234)
+    q97, q98, q99, q100, q102, q103, q104, q108, q109, q110, q111, q112, q114, q115, q116, q117, q118, q120, q121, q125, q127, q128, q129, q130, q131, q132, q133, q134, q135, q136, q137, q138, q141, q142, q144, q145, q146, q147, q148, q149, q150, q151, q153, q154, q155, q156, q157, q158, q159, q160, q162, q163, q164, q165, q166, q167, q168, q169, q170, q172, q173, q174, q175, q176, q177, q178, q179, q180, q182, q183, q184, q185, q187, q188, q189, q190, q191, q192, q193, q196, q197, q198, q199, q200, q203, q204, q205, q206, q207, q208, q209, q210, q211, q212, q213, q214, q215, q216, q217, q218, q219, q220, q223, q224, q225, q226, q227, q228, q231, q232, q233, q234) ++
+    heldout
 }

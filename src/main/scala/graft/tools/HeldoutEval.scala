@@ -1,57 +1,43 @@
 package graft.tools
 
-import graft.ja.{JaMode, JaTokenizer}
-import scala.io.Source
+import graft.ja.{JaGolden, JaMode, JaTokenizer}
 
 /** Held-out tokenizer evaluation (VERDICT r6 "Next round" #2).
   *
-  * Runs the default-config NORMAL tokenizer over the blind-authored
-  * held-out corpus (resources/graft/ja/heldout_corpus.tsv — 98 sentences
-  * authored from a topic list WITHOUT consulting the dictionary or tokenizer; see the file
+  * Runs the default-config NORMAL tokenizer over one blind-authored
+  * held-out set of `JaGolden.heldout` (set 1 by default:
+  * resources/graft/ja/heldout_corpus.tsv — 98 sentences authored from a
+  * topic list WITHOUT consulting the dictionary or tokenizer; see the file
   * header for the protocol) and reports the sentence-level full-sequence
   * match rate plus every diff. The FIRST run of this tool is the honest
   * out-of-sample conformance number recorded in SURVEY.md; later runs track
   * improvement from dictionary/lattice fixes.
+  *
+  * Usage: `runMain graft.tools.HeldoutEval [set]`.
   *
   * Mirrors the reference's robustness intent: KuromojiNEologdUDFTest.java
   * :202–259 tokenizes arbitrary news text the dictionary was not tuned on.
   */
 object HeldoutEval {
 
-  final case class Case(sid: Int, sentence: String, expected: Seq[String])
-
-  def load(resource: String = "/graft/ja/heldout_corpus.tsv"): Seq[Case] = {
-    val in = getClass.getResourceAsStream(resource)
-    require(in != null, s"missing resource $resource")
-    val src = Source.fromInputStream(in, "UTF-8")
-    try {
-      src.getLines().filterNot(l => l.startsWith("#") || l.trim.isEmpty).zipWithIndex.map {
-        case (line, idx) =>
-          val parts = line.split('\t')
-          require(parts.length == 2, s"heldout line ${idx + 1}: expected 2 columns, got ${parts.length}")
-          Case(idx + 1, parts(0), parts(1).split('|').toSeq)
-      }.toVector
-    } finally src.close()
-  }
-
-  def evaluate(resource: String = "/graft/ja/heldout_corpus.tsv"): (Int, Int, Seq[(Case, Seq[String])]) = {
+  /** (matched, total, (sid, sentence, expected, got) per diff). */
+  def evaluate(set: Int = 1): (Int, Int, Seq[(Int, String, Seq[String], Seq[String])]) = {
     val tok = new JaTokenizer(JaMode.Normal)
-    val cases = load(resource)
-    val diffs = cases.flatMap { c =>
-      val got = tok.tokenize(c.sentence).toSeq
-      if (got == c.expected) None else Some((c, got))
+    val rows = JaGolden.heldoutSet(set).rows
+    val diffs = rows.flatMap { case (sid, sentence, expected) =>
+      val got = tok.tokenize(sentence).toSeq
+      if (got == expected) None else Some((sid, sentence, expected, got))
     }
-    (cases.size - diffs.size, cases.size, diffs)
+    (rows.size - diffs.size, rows.size, diffs)
   }
 
   def main(args: Array[String]): Unit = {
-    val res = args.headOption.getOrElse("/graft/ja/heldout_corpus.tsv")
-    val (ok, total, diffs) = evaluate(res)
+    val (ok, total, diffs) = evaluate(args.headOption.fold(1)(_.toInt))
     val report = new StringBuilder
     report ++= f"heldout full-sequence match: $ok/$total (${100.0 * ok / total}%.1f%%)%n"
-    diffs.foreach { case (c, got) =>
-      report ++= s"sid=${c.sid}  ${c.sentence}\n"
-      report ++= s"  expected: ${c.expected.mkString("|")}\n"
+    diffs.foreach { case (sid, sentence, expected, got) =>
+      report ++= s"sid=$sid  $sentence\n"
+      report ++= s"  expected: ${expected.mkString("|")}\n"
       report ++= s"  got:      ${got.mkString("|")}\n"
     }
     print(report)

@@ -83,10 +83,18 @@ class AcMatchSpec extends AnyFunSuite {
       "SELECT ac_match(text, array('he', 'she', 'his', 'hers')) AS m FROM acm_sql")
       .head().getSeq[String](0)
     assert(r == Seq("he", "hers", "she"))
-    val err = intercept[Exception] {
-      spark.sql("SELECT ac_match(text, array(text)) FROM acm_sql").collect()
+    // every constant-argument function rejects a column argument
+    Seq(
+      "ac_match(text, array(text))" -> "ac_match patterns must be a constant ARRAY<STRING>",
+      "simhash64(text, length(text))" -> "simhash64 bits must be a constant INT",
+      "shingle_hashes(split(text, ' '), length(text))" -> "shingle_hashes k must be a constant INT",
+      "rolling_window_hashes(text, length(text))" -> "rolling_window_hashes win must be a constant INT"
+    ).foreach { case (call, msg) =>
+      val err = intercept[Exception] {
+        spark.sql(s"SELECT $call FROM acm_sql").collect()
+      }
+      assert(err.getMessage.contains(msg), err.getMessage)
     }
-    assert(err.getMessage.contains("constant ARRAY<STRING>"), err.getMessage)
   }
 
   test("Spark column path: ac_match equals the filter-of-contains composition") {

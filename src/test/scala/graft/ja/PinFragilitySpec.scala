@@ -7,10 +7,12 @@ import org.scalatest.funsuite.AnyFunSuite
   * silently re-segments the moment any fragment of it enters the
   * dictionary — measured live when リフト entering the dictionary split
   * the held-out-12 pin フォークリフト. After the KatAudit / KanjiAudit /
-  * HiraAudit sweeps every such token was lexicalized; this spec FAILS the
-  * build if a future corpus batch pins a new token in the fragile class,
-  * forcing the author to either add the lexeme or consciously pin a
-  * decomposition.
+  * HiraAudit sweeps every such token in the golden corpus and held-out
+  * sets 1-12 was lexicalized; this spec FAILS the build if a pin in those
+  * corpora falls into the fragile class, forcing the author to either add
+  * the lexeme or consciously pin a decomposition. Held-out sets 13 and
+  * later are not checked: they still pin unknown-run merges (the open
+  * list is in CHANGES.md), and lexicalizing them changes segmentation.
   *
   * Fragile = a multi-char single-script token (katakana >= 4, kanji >= 2,
   * hiragana >= 2) that (a) appears as an expected NORMAL token, (b) is not
@@ -19,6 +21,9 @@ import org.scalatest.funsuite.AnyFunSuite
   * merge it today).
   */
 class PinFragilitySpec extends AnyFunSuite {
+
+  /** The audit covered held-out sets 1-12; later sets are not checked. */
+  private val LastAuditedSet = 12
 
   private def scriptClass(t: String): Option[String] = {
     def all(p: Char => Boolean) = t.nonEmpty && t.forall(p)
@@ -40,13 +45,8 @@ class PinFragilitySpec extends AnyFunSuite {
       }.toSet
     val pinned: Seq[String] =
       (JaGolden.corpus.map(g => g.expected) ++
-        Seq(JaGolden.heldoutCorpus, JaGolden.heldoutCorpus2,
-          JaGolden.heldoutCorpus3, JaGolden.heldoutCorpus4,
-          JaGolden.heldoutCorpus5, JaGolden.heldoutCorpus6,
-          JaGolden.heldoutCorpus7, JaGolden.heldoutCorpus8,
-          JaGolden.heldoutCorpus9, JaGolden.heldoutCorpus10,
-          JaGolden.heldoutCorpus11, JaGolden.heldoutCorpus12)
-          .flatMap(_.map(_._3))).flatten.distinct
+        JaGolden.heldout.filter(_.set <= LastAuditedSet)
+          .flatMap(_.rows.map(_._3))).flatten.distinct
     val tok = new JaTokenizer()
     val fragile = pinned.filter { t =>
       scriptClass(t).isDefined && !known.contains(t) &&

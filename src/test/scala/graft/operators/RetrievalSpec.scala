@@ -204,6 +204,19 @@ class RetrievalSpec extends AnyFunSuite {
     assert(out == Map(1 -> 1, 2 -> 2, 3 -> 3), out)
   }
 
+  test("mmrDiversify: embeddings of mixed dimension fail instead of truncating") {
+    import spark.implicits._
+    val d = Seq(1L -> "a a a", 2L -> "a a b", 3L -> "a b b").toDF("doc_id", "text")
+    val e = Seq(
+      (1L, Array(1f, 0f)), (2L, Array(1f, 0f)), (3L, Array(0f, 1f, 1f)))
+      .toDF("vec_id", "embedding")
+    val err = intercept[IllegalArgumentException] {
+      Retrieval.mmrDiversify(d, e, "doc_id", "text", Seq("a"),
+        kLex = 3, kSel = 3, lamNum = 1L, lamDen = 2L, relUnit = 10L)
+    }
+    assert(err.getMessage.contains("differ in dimension"), err.getMessage)
+  }
+
   test("cohenKappa: hand-computed rationals; majority-class predictor gets kappa 0") {
     import spark.implicits._
     // n=4, agree=3; marginals pred {0:3, 1:1}, truth {0:2, 1:2}
