@@ -1111,25 +1111,28 @@ object Kernels {
     * for the interpreted `aggregate(array_sort(ts), 0.0, (acc,x) ->
     * acc + x.v)` HOF in the BM25 per-document rollup (Retrieval) and the
     * margin neighborhood means (Similarity). Bit-identical to the HOF
-    * form: the sort order matches array_sort's struct comparison on the
-    * reachable inputs (keys are groupBy/row_number outputs — distinct and
-    * non-null per array, so field 0 alone decides; the v tie-break is
-    * belt-and-braces), and the accumulation is the same left-to-right
-    * IEEE double chain. Any null element or null field yields null (the
-    * HOF's acc + null = null). `keyKind`: 0 = string, 1 = int, 2 = long.
+    * form: the sort order matches array_sort's struct comparison (a null
+    * key sorts first, then keys ascending, then v ascending; the query
+    * callers' keys are groupBy/row_number outputs, distinct and non-null
+    * per array, so field 0 alone decides there), and the accumulation is
+    * the same left-to-right IEEE double chain. A null-key element still
+    * adds its v; a null element or a null v yields null (the HOF's
+    * acc + null = null). `keyKind`: 0 = string, 1 = int, 2 = long.
     */
   def orderedStructDoubleSum(a: ArrayData, keyKind: Int): java.lang.Double = {
     val n = a.numElements
     if (n == 0) return java.lang.Double.valueOf(0.0)
     val sKeys = if (keyKind == 0) new Array[UTF8String](n) else null
     val lKeys = if (keyKind != 0) new Array[Long](n) else null
+    val nullKey = new Array[Boolean](n)
     val vals = new Array[Double](n)
     var i = 0
     while (i < n) {
       if (a.isNullAt(i)) return null
       val row = a.getStruct(i, 2)
-      if (row.isNullAt(0) || row.isNullAt(1)) return null
-      if (keyKind == 0) sKeys(i) = row.getUTF8String(0)
+      if (row.isNullAt(1)) return null
+      if (row.isNullAt(0)) nullKey(i) = true
+      else if (keyKind == 0) sKeys(i) = row.getUTF8String(0)
       else lKeys(i) = if (keyKind == 1) row.getInt(0).toLong else row.getLong(0)
       vals(i) = row.getDouble(1)
       i += 1
@@ -1139,20 +1142,24 @@ object Kernels {
     while (i < n) {
       val sk = if (sKeys != null) sKeys(i) else null
       val lk = if (lKeys != null) lKeys(i) else 0L
+      val nk = nullKey(i)
       val v = vals(i)
       var j = i - 1
       var cont = true
       while (j >= 0 && cont) {
         val c =
-          if (sKeys != null) sKeys(j).compareTo(sk)
+          if (nullKey(j) || nk) java.lang.Boolean.compare(!nullKey(j), !nk) // null first
+          else if (sKeys != null) sKeys(j).compareTo(sk)
           else java.lang.Long.compare(lKeys(j), lk)
         if (c > 0 || (c == 0 && java.lang.Double.compare(vals(j), v) > 0)) {
           if (sKeys != null) sKeys(j + 1) = sKeys(j) else lKeys(j + 1) = lKeys(j)
+          nullKey(j + 1) = nullKey(j)
           vals(j + 1) = vals(j)
           j -= 1
         } else cont = false
       }
       if (sKeys != null) sKeys(j + 1) = sk else lKeys(j + 1) = lk
+      nullKey(j + 1) = nk
       vals(j + 1) = v
       i += 1
     }

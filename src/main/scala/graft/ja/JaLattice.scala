@@ -8,8 +8,10 @@ package graft.ja
   * connection-id matrices (the reference builds those from mecab-ipadic-
   * NEologd, /root/reference/build.sh:104-161; no corpus statistics are
   * available offline, so transitions are hand-assigned per grammatical
-  * class instead of per context id). Costs are unit-free integers; lower is
-  * better. The invariants the tuning maintains:
+  * class instead of per context id; a matrix trained on the reviewed
+  * corpora was tried twice and rejected by the golden replay both times,
+  * PLANS.md). Costs are unit-free integers; lower is better. The
+  * invariants the tuning maintains:
   *
   *   - dictionary morphemes beat unknown runs covering the same span;
   *   - one long unknown run beats the same run fragmented (base cost is
@@ -147,75 +149,16 @@ private[ja] object JaCosts {
     else Noun
   }
 
-  /** Engine-contract cells pinned to engineered values even in the trained
-    * matrix (JaCostTrain): the 仮定/命令-form grammar block exists to rule
-    * out attachments that are UNGRAMMATICAL (×届け+た) — a ~1k-sentence
-    * corpus has zero/near-zero counts there, and smoothing would assign a
-    * far milder penalty than the contract needs (JaCorpusSpec e-row
-    * homograph pins). (Unknown,Unknown) > 0 is a soundness invariant of the
-    * fastSingleClass shortcut (JaFastPathSpec), not a statistic.
+  /** The connection matrix: cost of class `right` following class `left`
+    * at conn(left)(right). Hand-assigned per class pair (see the header);
+    * an unset cell is 0. Each set cell is a tuned MARGIN against the
+    * word-cost scales (dictCost/unknownCost), e.g. Num→NounSuffix −1200 so
+    * counter chains beat grouped unknown runs, or a grammar fence that rules
+    * out an ungrammatical attachment (×届け+た); its rationale sits beside it.
     */
-  val contractCells: Seq[(Int, Int)] = Seq(
-    (VerbCond, ParticleBa), (VerbCond, Particle), (VerbCond, Aux),
-    (VerbCond, AuxTa), (Noun, AuxTa), (Sahen, AuxTa),
-    (Particle, AuxTa), (BOS, AuxTa), (Particle, AuxU), (Particle, NounSuffix),
-    (BOS, VerbCond), (VerbInfl, ParticleBa), (AdjInfl, ParticleBa),
-    (BOS, ParticleBa), (Particle, ParticleBa), (Unknown, Unknown),
-    // The whole VOnbin attachment contract is grammar, not counts: the
-    // voiced 音便 stem licenses だ/で and nothing else — a ~1k-sentence
-    // corpus has near-zero counts in these cells and smoothing would
-    // replace the engineered margins with mild ones (ADVICE r10).
-    (VOnbin, AuxTa), (VOnbin, ParticleBa), (VOnbin, Aux), (VOnbin, Particle),
-    (VOnbin, VerbInfl), (VOnbin, VerbTerm), (Adv, AuxTa), (Adv, AuxMasu),
-    (Particle, Aux),
-    // The ます-paradigm attachment contract is grammar like AuxTa's: the
-    // polite auxiliary is 連用形-only, so every non-連用 host cell is an
-    // engineered fence a small corpus could never learn (×に+まし was
-    // reading ～になりました with the listing particle なり).
-    (VerbInfl, AuxMasu), (Aux, AuxMasu), (AuxMasu, Aux), (AuxMasu, AuxTa),
-    (Noun, AuxMasu), (Sahen, AuxMasu), (NounSuffix, AuxMasu),
-    (Num, AuxMasu), (Particle, AuxMasu), (BOS, AuxMasu),
-    (VerbCond, AuxMasu), (VOnbin, AuxMasu), (AdjInfl, AuxMasu),
-    (AdjTerm, AuxMasu), (VerbTerm, AuxMasu),
-    // the AuxNai block mirrors Aux except the VOnbin fence — all grammar
-    (BOS, AuxNai), (VerbInfl, AuxNai), (AdjInfl, AuxNai), (Aux, AuxNai),
-    (AuxMasu, AuxNai), (AuxNai, Aux), (AuxNai, AuxNai), (AuxNai, AuxTa),
-    (AuxNai, AuxMasu), (Noun, AuxNai), (Sahen, AuxNai),
-    (VerbCond, AuxNai), (VOnbin, AuxNai),
-    // the AuxDesu block mirrors Aux except the 連用/VOnbin re-licensing
-    (BOS, AuxDesu), (Noun, AuxDesu), (Sahen, AuxDesu), (Aux, AuxDesu),
-    (AuxNai, AuxDesu), (AuxMasu, AuxDesu), (AuxDesu, Aux),
-    (AuxDesu, AuxDesu), (AuxDesu, AuxTa), (AuxDesu, AuxMasu),
-    (AuxDesu, AuxNai), (VerbCond, AuxDesu), (VerbInfl, AuxDesu),
-    (AdjInfl, AuxDesu), (VOnbin, AuxDesu)) ++
-    (0 until NumClasses).map((AdjGaru, _)) ++ // the whole 語幹 row is grammar
-    (0 until NumClasses).map((AdjGaru1, _)) ++ // …and the single-kanji row too
-    (0 until NumClasses).map((VInt, _)) ++ // …and the bare-意向 row
-    (0 until NumClasses).map((VMizen, _)) // …and the bare-未然 row
-
-  /** eos entries pinned alongside contractCells: a bare 命令形 may end a
-    * region (届け！) and a dangling prefix may not — grammar, not counts.
-    */
-  val contractEos: Seq[Int] =
-    Seq(VerbCond, Prefix, AdjGaru, AdjGaru1, VOnbin, VInt, VMizen)
-
-  /** Hand-assigned prior matrix: the bootstrap cost model, the fallback for
-    * classes unseen in the training corpora, and the source of the
-    * contract-cell values above. `conn`/`eos` below are the trained model
-    * when the generated resource is present (JaCostTrain), else this.
-    */
-  /** Cells explicitly assigned in handConn, recorded at construction: each
-    * is a tuned MARGIN against the word-cost scales (dictCost/unknownCost),
-    * e.g. Num→NounSuffix −1200 so counter chains beat grouped unknown runs.
-    * −log P(r|l) magnitudes at S=350 are systematically milder and flip
-    * those razor-thin pins, so training (JaCostTrain) pins these and learns
-    * only the cells the hand model is silent on (default 0).
-    */
-  var handSetCells: Set[(Int, Int)] = Set.empty
-
-  val handConn: Array[Array[Int]] = {
+  val conn: Array[Array[Int]] = {
     val m = Array.fill(NumClasses, NumClasses)(0)
-    def set(a: Int, b: Int, v: Int): Unit = { m(a)(b) = v; handSetCells += ((a, b)) }
+    def set(a: Int, b: Int, v: Int): Unit = m(a)(b) = v
     // sentences/regions rarely open with dependent morphemes. BOS→Aux was
     // 1500 until round 11: the aux たら (600+1500=2100) beat the fish noun
     // たら (2600) at sentence start — a sentence never opens with a bare
@@ -305,7 +248,7 @@ private[ja] object JaCosts {
     set(BOS, AuxTa, 2300) // same level as BOS→Aux/AuxMasu
     set(NounSuffix, AuxTa, 800)
     set(Num, AuxTa, 800)
-    set(VerbCond, AuxTa, 1200) // ×届け+た (contract cell, as with Aux)
+    set(VerbCond, AuxTa, 1200) // ×届け+た (grammar fence, as with Aux)
     set(BOS, VerbCond, 400) // commands exist but are rare in corpus prose
     // voiced-past 音便 stem (泳い/死ん/遊ん/読ん): だ/で attach like the
     // generic VerbInfl auxiliaries, but the UNVOICED た is ungrammatical
@@ -342,7 +285,8 @@ private[ja] object JaCosts {
     // やっ(→やる)|て (2600) in held-out-8 sid 4 — 900 flips it to 2800 while
     // legitimate double-particle chains (には/からも) have no dictionary
     // competitor on their span and are unaffected (golden replay green)
-    set(Unknown, Unknown, 400)
+    set(Unknown, Unknown, 400) // must stay > 0: fastSingleClass emits a
+    // Latin/Digit run whole on the strength of it (JaFastPathSpec)
     set(Unknown, NounSuffix, -300) // 名前+さん / 地名+市: an unknown kanji
     // run followed by a noun suffix is the honorific/toponym pattern —
     // without the cell, 鈴木さん+verb tied ×鈴木|さ(→する)|ん via the
@@ -547,11 +491,10 @@ private[ja] object JaCosts {
     m
   }
 
-  private[ja] def handEosValue(l: Int): Int = handEos(l)
-
-  private val handEos: Array[Int] = {
+  /** End-of-region cost by the last token's class; an unset class is 0. */
+  val eos: Array[Int] = {
     val a = Array.fill(NumClasses)(0)
-    a(Prefix) = 1000
+    a(Prefix) = 1000 // a dangling prefix never ends a region
     a(VerbInfl) = 400
     a(VerbCond) = 200 // bare imperative can end a sentence (届け！)
     a(AdjGaru) = 1000 // a dangling adjective 語幹 never ends a region
@@ -564,18 +507,6 @@ private[ja] object JaCosts {
     // nominal dangling すぎ (飲みすぎ。) both legitimately end a region
     a
   }
-
-  /** The active connection model: corpus-trained when the generated
-    * resource exists (graft/ja/conn_trained.tsv, written by JaCostTrain
-    * from transition counts over the full-sequence-verified corpora — the
-    * engine's analogue of mecab-ipadic's corpus-trained matrices,
-    * /root/reference/build.sh:161), hand prior otherwise.
-    */
-  val (conn: Array[Array[Int]], eos: Array[Int]) =
-    JaCostModel.loadTrained(NumClasses) match {
-      case Some((c, e)) => (c, e)
-      case None => (handConn, handEos)
-    }
 
   /** conn flattened and transposed for the relaxation inner loop: cost of
     * `right` following `left` at connT(right * NumClasses + left) — the loop
@@ -592,7 +523,6 @@ private[ja] object JaCosts {
     }
     a
   }
-
 
   private def posBase(e: DictEntry): Int = {
     val pos = e.pos

@@ -80,15 +80,6 @@ final class JaTokenizer(
     */
   private[ja] var fastPathEnabled = true
 
-  /** Diagnostic/calibration seam: when non-null, the backtrack loop records
-    * every winning-path edge as (surface, dictEntry-or-null, connection
-    * class) before filtering — the raw Viterbi path, including tokens the
-    * T3/T5 stop filters later drop. Used by tools.PathDump and the
-    * corpus-transition counter (JaCostCalibration); null (the default) adds
-    * only a null check per emitted token, nothing in the relaxation loop.
-    */
-  private[graft] var pathSink: ArrayBuffer[(String, DictEntry, Int)] = null
-
   /** Tokenize one line. Null handling (null→null) lives in the caller
     * (reference A9); empty string → empty array.
     */
@@ -153,12 +144,7 @@ final class JaTokenizer(
         (userTrie != null && userTrie.startsWith(c))) return false
       i += 1
     }
-    val run = line.substring(from, end)
-    if (pathSink != null) {
-      pathSink += (("", null, -1)) // region boundary sentinel
-      pathSink += ((run, null, if (cls0 == CharClasses.Digit) JaCosts.Num else JaCosts.Unknown))
-    }
-    emitUnknown(run, out)
+    emitUnknown(line.substring(from, end), out)
     true
   }
 
@@ -314,13 +300,10 @@ final class JaTokenizer(
       cl = bpSrc(idx)
       p = np
     }
-    if (pathSink != null) pathSink += (("", null, -1)) // region boundary sentinel
     var k = path.length - 1
     while (k >= 0) {
       val idx = path(k)
       val e = bpEntry(idx)
-      if (pathSink != null)
-        pathSink += ((line.substring(from + bpStart(idx), from + idx / C), e, idx % C))
       if (e != null) emitEntry(e, bpUser(idx), out)
       else {
         val tokenEnd = from + idx / C

@@ -192,9 +192,22 @@ object HistogramQuantiles {
         max(col("__qb_n")).as("__qb_n"))
   }
 
+  /** Argument contract shared by [[quantiles]] and [[quantileBin]]: every
+    * q in (0, 1] and distinct. thresholdHits yields no row for a q outside
+    * that range and one row for duplicates, so a bad `qs` would otherwise
+    * quietly drop rows (quantiles) or index past the threshold array
+    * (quantileBin's unrolled element_at, an error under ANSI).
+    */
+  private def checkArgs(buckets: Int, qs: Seq[Double]): Unit = {
+    require(buckets >= 1 && qs.nonEmpty, "need buckets >= 1 and qs non-empty")
+    val shown = qs.mkString("[", ", ", "]")
+    require(qs.forall(q => q > 0 && q <= 1), s"every q must be in (0, 1], got $shown")
+    require(qs.distinct.size == qs.size, s"qs must be distinct, got $shown")
+  }
+
   def quantiles(df: DataFrame, valueCol: String, buckets: Int,
       qs: Seq[Double]): DataFrame = {
-    require(buckets >= 1 && qs.nonEmpty, "need buckets >= 1 and qs non-empty")
+    checkArgs(buckets, qs)
     val (_, cum) = statsAndCum(df, valueCol, buckets)
     thresholdHits(cum, qs)
       .select(col("q"), col("__qb_bucket").as("bucket"),
@@ -222,7 +235,7 @@ object HistogramQuantiles {
     */
   def quantileBin(df: DataFrame, valueCol: String, buckets: Int,
       qs: Seq[Double]): DataFrame = {
-    require(buckets >= 1 && qs.nonEmpty, "need buckets >= 1 and qs non-empty")
+    checkArgs(buckets, qs)
     val v = col(valueCol).cast("double")
     // the threshold row CARRIES lo/hi (thresholdHits folds the stats
     // constants through the histogram aggregate), so the per-row pass
@@ -244,7 +257,7 @@ object HistogramQuantiles {
     // element. Counting is order-free, so the unrolled sum over positions
     // equals size(filter(...)) exactly; v-null rows stay null via the
     // outer when, and a row only reaches qbin when thr has all |qs|
-    // thresholds (collect_list over the non-empty threshold hits).
+    // thresholds (checkArgs makes every q hit exactly one bucket).
     val nBelow = qs.indices
       .map(i => when(element_at(col("__qb_tb"), i + 1) < idx, 1).otherwise(0))
       .reduce(_ + _)

@@ -4,8 +4,8 @@ import org.apache.spark.unsafe.types.UTF8String
 
 import graft.expr.Kernels
 
-/** Single-thread subword-segmentation kernel micro-benchmark (the TokBench
-  * pattern): chars/s of the two plan-embedded decode kernels — BPE
+/** Single-thread subword-segmentation kernel micro-benchmark: chars/s of
+  * the two plan-embedded decode kernels — BPE
   * (graft.expr.Kernels.bpeSegment, the q187 apply path) and unigram-LM
   * Viterbi (Kernels.unigramSegment, the q218 E-step) — on a deterministic
   * synthetic corpus (LCG, fixed seed; no wall-clock dependence). The

@@ -239,4 +239,39 @@ class SparkFunctionsSpec extends AnyFunSuite {
     val version = s.sql("SELECT tokenize_ja_neologd() AS v").head().getSeq[String](0)
     assert(version.head == graft.GraftVersion.value)
   }
+
+  test("ordered_struct_sum matches the array_sort HOF on null keys, interpreted and CODEGEN_ONLY") {
+    // array_sort's struct ordering puts a null key first and still sums its
+    // v; a null element or a null v makes the HOF's acc + null null
+    val strKeys =
+      """(1, array(named_struct('k', 'b', 'v', 1.5D), named_struct('k', CAST(NULL AS STRING), 'v', 0.25D),
+        |          named_struct('k', 'a', 'v', 2.0D))),
+        |(2, array(named_struct('k', CAST(NULL AS STRING), 'v', 3.0D),
+        |          named_struct('k', CAST(NULL AS STRING), 'v', 1.0D))),
+        |(3, array(named_struct('k', 'a', 'v', CAST(NULL AS DOUBLE)),
+        |          named_struct('k', CAST(NULL AS STRING), 'v', 1.0D))),
+        |(4, array(CAST(NULL AS STRUCT<k: STRING, v: DOUBLE>), named_struct('k', 'a', 'v', 1.0D)))""".stripMargin
+    val longKeys =
+      "(5, array(named_struct('k', 7L, 'v', 0.1D), named_struct('k', CAST(NULL AS BIGINT), 'v', 0.2D)))"
+    def run(factoryMode: String, wholeStage: String): Seq[Row] = {
+      // newSession(): suites share TestSpark.spark's conf, never mutate it
+      val s = spark.newSession()
+      s.conf.set("spark.sql.codegen.wholeStage", wholeStage)
+      s.conf.set("spark.sql.codegen.fallback", "false")
+      s.conf.set("spark.sql.codegen.factoryMode", factoryMode)
+      // keep the projection out of the optimizer's local-relation folding,
+      // which would evaluate it interpreted in both modes
+      s.conf.set("spark.sql.optimizer.excludedRules",
+        "org.apache.spark.sql.catalyst.optimizer.ConvertToLocalRelation")
+      Seq(strKeys, longKeys).flatMap(rows => s.sql(s"SELECT * FROM VALUES $rows AS t(id, ts)")
+        .select($"id", graft.functions.ordered_struct_sum($"ts"),
+          expr("aggregate(array_sort(ts), 0.0D, (acc, x) -> acc + x.v)"))
+        .orderBy("id").collect())
+    }
+    for (rows <- Seq(run("NO_CODEGEN", "false"), run("CODEGEN_ONLY", "true"))) {
+      rows.foreach(r => assert(r.get(1) == r.get(2), r))
+      assert(rows.map(r => r.getInt(0) -> r.isNullAt(1)).toMap ==
+        Map(1 -> false, 2 -> false, 3 -> true, 4 -> true, 5 -> false), rows)
+    }
+  }
 }

@@ -104,4 +104,14 @@ class HistogramQuantilesSpec extends AnyFunSuite {
       .collect().toSeq.sortBy(_.getDouble(0))
     assert(a.map(_.toSeq) == b.map(_.toSeq))
   }
+
+  // thresholdHits yields no row for a q outside (0, 1] and one row for a
+  // duplicated q: both functions must reject such qs before planning
+  for ((what, qs) <- Seq("q > 1" -> Seq(0.5, 1.5), "duplicate q" -> Seq(0.5, 0.5),
+      "NaN q" -> Seq(Double.NaN)))
+    test(s"qs with a $what is rejected up front") {
+      val d = df((1 to 10).map(_.toDouble))
+      intercept[IllegalArgumentException](HistogramQuantiles.quantiles(d, "x", 4, qs))
+      intercept[IllegalArgumentException](HistogramQuantiles.quantileBin(d, "x", 4, qs))
+    }
 }
